@@ -1307,6 +1307,7 @@ def q_ivfpq_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings", fan=True)
     ck, bk = ("ivf_prod", sf_dir), ("pq_prod", sf_dir)
+    sx = None
     if ck not in _TRAIN_CACHE or bk not in _TRAIN_CACHE:
         # both trainers draw the IDENTICAL sample (same ordering
         # expression, seed, size) — collect it once; the sort over the

@@ -17,6 +17,11 @@ deliberately NOT Structured Streaming):
   ``run=<run_id>`` subdirs, then appends one lineage row per completed
   bucket: ``(run_id, bucket, cell_min, cell_max, row_count, checksum,
   files, ts)`` — ``files`` lists the data files, manifest-style;
+- metadata stays on the driver, as Iceberg's FileIO keeps it: after the
+  data write a commit runs ONE Spark job (the per-bucket aggregate of the
+  landed files, collected), and the lineage append, the snapshot/schema/
+  spec logs and the (bucket, run) pins a read applies are pyarrow
+  reads/writes on the driver (Spark fallback for remote URIs);
 - checksum is ``bit_xor(xxhash64(key cols))`` — order-insensitive,
   overflow-free (ANSI-safe), cheap in codegen;
 - resume = call the same function again: completed buckets are skipped
@@ -34,6 +39,8 @@ half-written files are orphaned, never read.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import time
 import uuid
@@ -41,6 +48,7 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 BUCKET_COL = "cell_bucket"
 RUN_COL = "run"
@@ -81,25 +89,9 @@ def _local_fs_path(path: str) -> str | None:
     return None if "://" in p else p
 
 
-_ARROW_TYPES: dict[str, object] = {}
-
-
-def _arrow_schema(ddl: str):
-    import pyarrow as pa
-
-    types = {
-        "long": pa.int64(), "bigint": pa.int64(),
-        "int": pa.int32(), "string": pa.string(),
-    }
-    fields = []
-    for part in ddl.split(","):
-        name, typ = part.strip().split()
-        fields.append(pa.field(name, types[typ]))
-    return pa.schema(fields)
-
-
 def _write_tiny(
-    spark: SparkSession, rows: list, ddl: str, path: str, mode: str = "append"
+    spark: SparkSession, rows: list, schema: str | StructType, path: str,
+    mode: str = "append",
 ) -> None:
     """Append/overwrite a tiny metadata log.
 
@@ -108,32 +100,31 @@ def _write_tiny(
     fast-path.  Each metadata write issued as a Spark job pays whole-job
     scheduling latency to move a handful of rows (measured ~0.15 s per
     write at local[32]; a snapshot commit does three of them).  Local
-    paths write one parquet file via pyarrow with an EXPLICIT arrow
-    schema derived from the same DDL the Spark fallback uses, so footer
-    types are identical whichever path wrote a given file; non-local
-    URIs (s3://, hdfs://) fall back to the one-task Spark write."""
+    paths write one parquet file via pyarrow whose schema is pyspark's own
+    arrow mapping of ``schema`` (a DDL string or a StructType, nullability
+    and nested types included), so the footer is the one a Spark write of
+    the same rows would produce; non-local URIs (s3://, hdfs://) fall back
+    to the one-task Spark write."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
     local = _local_fs_path(path)
     if local is None:
-        df = _tiny_df(spark, rows, ddl)
+        df = _tiny_df(spark, rows, schema)
         df.write.mode(mode).parquet(path)
         return
     import shutil
-    import uuid as _uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = _arrow_schema(ddl)
-    cols = {
-        f.name: [r[i] for r in rows] for i, f in enumerate(schema)
-    }
-    table = pa.table(cols, schema=schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = {f.name: [r[i] for r in rows] for i, f in enumerate(arrow_schema)}
+    table = pa.table(cols, schema=arrow_schema)
     if mode == "overwrite" and os.path.exists(local):
         shutil.rmtree(local)
     os.makedirs(local, exist_ok=True)
-    pq.write_table(
-        table, os.path.join(local, f"part-{_uuid.uuid4().hex}.parquet")
-    )
+    pq.write_table(table, os.path.join(local, f"part-{uuid.uuid4().hex}.parquet"))
 
 
 def write_table_properties(spark: SparkSession, out_dir: str, props: dict) -> None:
@@ -149,11 +140,10 @@ def write_table_properties(spark: SparkSession, out_dir: str, props: dict) -> No
 
 
 def read_table_properties(spark: SparkSession, in_dir: str) -> dict:
-    try:
-        rows = spark.read.parquet(f"{in_dir}/{PROPS_SUBDIR}").collect()
-    except Exception:  # noqa: BLE001 — absent sidecar == no properties
-        return {}
-    return {r["key"]: r["value"] for r in rows}
+    """Only an ABSENT sidecar means "no properties"; a present one that
+    cannot be read raises rather than silently dropping them."""
+    rows = _meta_rows(spark, f"{in_dir}/{PROPS_SUBDIR}")
+    return {r.key: r.value for r in rows or []}
 
 
 def propagate_table_properties(
@@ -172,44 +162,70 @@ def propagate_table_properties(
 def _completed_bucket_list(
     spark: SparkSession, lineage_path: str
 ) -> list[int] | None:
-    """Distinct completed buckets, read DRIVER-SIDE on local paths (the
-    lineage table is bounded by bucket count x runs — metadata scale);
-    falls back to a Spark distinct+collect on remote URIs."""
-    if not _lineage_exists(spark, lineage_path):
-        return None
-    local = _local_fs_path(lineage_path)
-    if local is not None:
-        import glob as _glob
+    """Distinct completed buckets, or None for a never-committed table;
+    the lineage log is metadata scale (bucket count x runs), so it is read
+    driver-side through ``_meta_rows``."""
+    rows = _meta_rows(spark, lineage_path)
+    return None if rows is None else sorted({getattr(r, BUCKET_COL) for r in rows})
 
-        import pyarrow.parquet as pq
 
-        files = sorted(_glob.glob(os.path.join(local, "*.parquet")))
-        if not files:
-            return None
-        seen: set[int] = set()
-        for f in files:
-            seen.update(
-                pq.read_table(f, columns=[BUCKET_COL])
-                .column(BUCKET_COL)
-                .to_pylist()
-            )
-        return sorted(seen)
-    return sorted(
-        r[BUCKET_COL]
-        for r in spark.read.parquet(lineage_path)
-        .select(BUCKET_COL)
-        .distinct()
-        .collect()
+def _landed_lineage(
+    spark: SparkSession,
+    out_dir: str,
+    schema: StructType,
+    run_id: str,
+    done: list[int],
+    cell_col: str,
+    key_cols: list[str],
+) -> tuple[StructType, list]:
+    """(schema, rows) of the lineage rows for the buckets ``run_id``
+    committed: ONE Spark job, collected to the driver.
+
+    Lineage facts come from a READ-BACK of the committed files, not from
+    re-evaluating the input DAG (which would run the upstream pipeline
+    again), and that makes the checksum an audit of the files themselves.
+    The read globs THIS run's dirs (basePath recovers the partition cols)
+    with ``schema``, the written frame's: no footer-inference job, and no
+    older file predating a rename/add decides the columns.  ``done``
+    buckets are pruned (a same-run_id retry finds its recorded dirs)."""
+    # a child session (same SparkContext, own SQL conf) with AQE off: AQE
+    # runs each shuffle as a job of its own, and a result of at most
+    # n_buckets + 1 rows needs one reducer at any input scale — so the
+    # aggregate is ONE job, not two
+    meta = spark.newSession()
+    meta.conf.set("spark.sql.adaptive.enabled", "false")
+    meta.conf.set("spark.sql.shuffle.partitions", "1")
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    meta.conf.set(key, spark.conf.get(key))
+    try:
+        landed = (
+            meta.read.schema(schema)
+            .option("basePath", out_dir)
+            .parquet(f"{out_dir}/{BUCKET_COL}=*/{RUN_COL}={run_id}")
+            # hidden column: select it at the scan to list the data files
+            .select("*", F.col("_metadata.file_path").alias("__file"))
+            .where(F.col(RUN_COL) == run_id)
+        )
+    except AnalysisException:  # empty input wrote no files at all (the
+        # glob matches nothing -> PATH_NOT_FOUND); any other read failure
+        # propagates: a swallowed transient error would silently record
+        # "nothing written"
+        return schema, []
+    if done:
+        landed = landed.where(~F.col(BUCKET_COL).isin(done))
+    lineage = (
+        landed.groupBy(BUCKET_COL)
+        .agg(
+            F.min(cell_col).alias("cell_min"),
+            F.max(cell_col).alias("cell_max"),
+            F.count(F.lit(1)).alias("row_count"),
+            F.bit_xor(F.xxhash64(*key_cols)).alias("checksum"),
+            F.array_sort(F.collect_set(F.col("__file"))).alias("files"),
+        )
+        .withColumn("run_id", F.lit(run_id))
+        .withColumn("ts", F.lit(int(time.time() * 1000)))
     )
-
-
-def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame | None:
-    rows = _completed_bucket_list(spark, lineage_path)
-    if rows is None:
-        return None
-    return spark.createDataFrame(
-        [(int(b),) for b in rows], f"{BUCKET_COL} int"
-    )
+    return lineage.schema, sorted(lineage.collect(), key=lambda r: r[BUCKET_COL])
 
 
 def write_with_lineage(
@@ -243,7 +259,6 @@ def write_with_lineage(
     bucketed = with_bucket(df, cell_col, n_buckets)
 
     done_list = _completed_bucket_list(spark, lineage_path)
-    done = None
     skipped = 0
     if done_list is not None:
         skipped = len(done_list)
@@ -268,84 +283,39 @@ def write_with_lineage(
     # this exchange — column-only keeps it REPARTITION_BY_COL so AQE can
     # rebalance straggler buckets; each bucket still hashes to exactly one
     # reducer, preserving one file per (bucket, run).
-    bucketed.repartition(F.col(BUCKET_COL)).withColumn(
+    written_df = bucketed.repartition(F.col(BUCKET_COL)).withColumn(
         RUN_COL, F.lit(run_id)
-    ).write.option(
+    )
+    written_df.write.option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy(BUCKET_COL, RUN_COL).mode("overwrite").parquet(out_dir)
 
-    # lineage facts come from a READ-BACK of the committed bucket files, not
-    # from re-evaluating the input DAG (which would run the whole upstream
-    # pipeline again for the agg and a third time for the count — the
-    # round-2 3x-compute finding).  Reading what actually landed also makes
-    # the checksum an integrity audit of the files themselves.  Restrict to
-    # THIS run's subdirs == exactly the buckets this run committed.
-    try:
-        # _metadata is a hidden column: select it at the scan (it does not
-        # survive joins) so the lineage row can list its data files.
-        # Path-glob to THIS run's dirs (basePath recovers the partition
-        # cols): lists only the run's directories, and — essential once
-        # schema evolution exists — takes the footer schema from this
-        # run's files, not from an arbitrary older file whose columns may
-        # predate a rename/add.
-        landed = (
-            spark.read.option("basePath", out_dir)
-            .parquet(f"{out_dir}/{BUCKET_COL}=*/{RUN_COL}={run_id}")
-            .select("*", F.col("_metadata.file_path").alias("__file"))
-            .where(F.col(RUN_COL) == run_id)
-        )
-    except AnalysisException:  # empty input wrote no files at all (the
-        # glob matches nothing -> PATH_NOT_FOUND); any other read failure
-        # propagates (round-3 advice: a swallowed transient error silently
-        # recorded "nothing written")
-        landed = None
-    written = 0
-    if landed is not None:
-        if done is not None:
-            landed = landed.join(F.broadcast(done), BUCKET_COL, "left_anti")
-        lineage = (
-            landed.groupBy(BUCKET_COL)
-            .agg(
-                F.min(cell_col).alias("cell_min"),
-                F.max(cell_col).alias("cell_max"),
-                F.count(F.lit(1)).alias("row_count"),
-                F.bit_xor(F.xxhash64(*key_cols)).alias("checksum"),
-                F.collect_set(F.col("__file")).alias("files"),
-            )
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("ts", F.lit(int(time.time() * 1000)))
-        ).persist()
-        written = lineage.count()
-        if written:
-            # coalesce(1) over the PERSISTED per-bucket aggregate (row
-            # count bounded by n_buckets): the aggregate exchange above
-            # it keeps the heavy work parallel, and one file per commit
-            # keeps the lineage log's file count = commit count (the
-            # _tiny_df rationale; this frame is computed, not local, so
-            # the parallelize(…, 1) path doesn't apply)
-            lineage.coalesce(1).write.mode("append").parquet(lineage_path)
-        if audit_input:
-            want = bucketed.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64(*key_cols)).alias("h"),
-            ).first()
-            got = lineage.agg(
-                F.sum("row_count").alias("n"),
-                F.bit_xor("checksum").alias("h"),
-            ).first()
-            if (want["n"], want["h"]) != (got["n"] or 0, got["h"]):
-                raise RuntimeError(
-                    f"write-time divergence: input (rows={want['n']}, "
-                    f"checksum={want['h']}) vs committed files "
-                    f"(rows={got['n']}, checksum={got['h']})"
-                )
-        lineage.unpersist()
-    elif audit_input:
-        want = bucketed.agg(F.count(F.lit(1)).alias("n")).first()
-        if want["n"]:
+    # commit: ONE Spark job computes the per-bucket lineage rows from the
+    # landed files (_landed_lineage); everything after it — the lineage
+    # append, the audit, the schema/spec/snapshot logs — is driver-side
+    # metadata work on at most n_buckets + 1 rows.
+    schema, rows = _landed_lineage(
+        spark, out_dir, written_df.schema, run_id, done_list or [],
+        cell_col, key_cols,
+    )
+    written = len(rows)
+    if written:
+        # appended DRIVER-SIDE (_write_tiny): one file per commit, so the
+        # lineage log's file count == commit count
+        _write_tiny(spark, rows, schema, lineage_path)
+    if audit_input:
+        want = bucketed.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64(*key_cols)).alias("h"),
+        ).first()
+        hs = [r["checksum"] for r in rows]
+        got_n = sum(r["row_count"] for r in rows)
+        got_h = functools.reduce(operator.xor, hs) if hs else None
+        if (want["n"], want["h"]) != (got_n, got_h):
             raise RuntimeError(
-                f"write-time divergence: input had {want['n']} rows but "
-                f"no files landed"
+                f"write-time divergence: input (rows={want['n']}, "
+                f"checksum={want['h']}) vs committed files "
+                f"(rows={got_n}, checksum={got_h})"
             )
     if table_props:
         write_table_properties(spark, out_dir, table_props)
@@ -498,25 +468,31 @@ def read_manifest(spark: SparkSession, out_dir: str, snapshot_id: int) -> DataFr
 
 
 def _pinned_read(
-    spark: SparkSession, out_dir: str, pins: DataFrame, merge: bool = False
+    spark: SparkSession, out_dir: str, pins_path: str, merge: bool = False
 ) -> DataFrame:
-    """Data restricted to the (bucket, run) pairs in ``pins`` — partition
-    pruning makes this touch only the pinned directories; the run column is
-    dropped so reader-facing schema stays stable.  ``merge``: set when the
-    table has >1 schema version, so files written under different schemas
-    union their columns (otherwise Spark picks one file's footer and a
-    post-evolution column may silently vanish)."""
-    pairs = pins.select(
-        BUCKET_COL, F.col("run_id").alias(RUN_COL)
-    ).distinct()
+    """Data restricted to the (bucket, run) pairs recorded by the log at
+    ``pins_path`` (lineage table or snapshot manifest).  The log is read
+    driver-side (``_meta_rows``) into a partition filter: the scan reads
+    only the pinned dirs, and no Spark job reads or broadcasts the log.
+    The run column is dropped so reader-facing schema stays stable.
+    ``merge``: set when the table has >1 schema version, so files written
+    under different schemas union their columns (otherwise Spark picks one
+    file's footer and a post-evolution column may silently vanish)."""
+    pins = _meta_rows(spark, pins_path)
+    if pins is None:
+        raise FileNotFoundError(f"no (bucket, run) log at {pins_path}")
+    by_run: dict[str, set[int]] = {}
+    for r in pins:
+        by_run.setdefault(r.run_id, set()).add(getattr(r, BUCKET_COL))
+    keep = F.lit(False)
+    for run, buckets in sorted(by_run.items()):
+        keep = keep | (
+            (F.col(RUN_COL) == run) & F.col(BUCKET_COL).isin(sorted(buckets))
+        )
     reader = spark.read
     if merge:
         reader = reader.option("mergeSchema", "true")
-    return (
-        reader.parquet(out_dir)
-        .join(F.broadcast(pairs), [BUCKET_COL, RUN_COL], "left_semi")
-        .drop(RUN_COL)
-    )
+    return reader.parquet(out_dir).where(keep).drop(RUN_COL)
 
 
 def read_current(spark: SparkSession, out_dir: str, lineage_path: str) -> DataFrame:
@@ -527,8 +503,7 @@ def read_current(spark: SparkSession, out_dir: str, lineage_path: str) -> DataFr
     a file was written null-fill)."""
     rows = _schema_rows(spark, out_dir)
     df = _pinned_read(
-        spark, out_dir, spark.read.parquet(lineage_path),
-        merge=_nversions(rows) > 1,
+        spark, out_dir, lineage_path, merge=_nversions(rows) > 1
     )
     if not rows:
         return df
@@ -548,7 +523,7 @@ def read_as_of(spark: SparkSession, out_dir: str, snapshot_id: int) -> DataFrame
     back under its as-of name via field-id resolution."""
     rows = _schema_rows(spark, out_dir)
     df = _pinned_read(
-        spark, out_dir, read_manifest(spark, out_dir, snapshot_id),
+        spark, out_dir, f"{out_dir}/{MANIFESTS_SUBDIR}/snap={snapshot_id}",
         merge=_nversions(rows) > 1,
     )
     if not rows:
@@ -634,10 +609,6 @@ def _meta_rows(spark: SparkSession, path: str) -> list | None:
         return rows
     df = _read_meta(spark, path)
     return None if df is None else df.collect()
-
-
-def schema_log(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return _read_meta(spark, f"{out_dir}/{SCHEMAS_SUBDIR}")
 
 
 def partition_specs(spark: SparkSession, out_dir: str) -> DataFrame | None:

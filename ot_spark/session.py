@@ -14,6 +14,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _submitted_master() -> str | None:
+    """The master spark-submit handed this driver, or None.
+
+    spark-submit starts the JVM first, passes its gateway to the Python
+    driver through ``PYSPARK_GATEWAY_PORT`` and records ``--master`` as
+    the JVM system property ``spark.master``.  A plain ``python`` run has
+    no JVM yet; starting one here would launch it before the builder's
+    driver-memory setting could reach it, so that case returns None."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master")
+
+
 def get_spark(
     app_name: str = "ot_spark",
     parallelism: int | None = None,
@@ -24,7 +40,8 @@ def get_spark(
     """Build (or fetch) the session.
 
     ``parallelism`` controls local core count (``local[N]``); at cluster
-    scale it is ignored and executors come from spark-submit.  Shuffle
+    scale it is ignored and executors come from spark-submit, whose
+    ``--master`` is kept when ``master`` is not given.  Shuffle
     partitions default to 2x parallelism — enough to keep AQE's coalescing
     busy without tiny-task overhead at local scale; at 100 TB this knob is
     instead set to ~2-3x total executor cores and AQE coalesces down.
@@ -34,7 +51,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * parallelism, 8)
     if master is None:
-        master = f"local[{parallelism}]"
+        master = _submitted_master() or f"local[{parallelism}]"
 
     builder = (
         SparkSession.builder.master(master)
@@ -75,6 +92,15 @@ def get_spark(
         # Capping hugeMethodLimit at the JIT threshold makes Spark fall
         # back to the per-operator path exactly when fusion stops paying.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # A lineage table has one cell_bucket=*/run=* dir per bucket (65 at
+        # the default 64 buckets); past this threshold (default 32) Spark
+        # lists the dirs with a Spark job of one task per dir.  Measured on
+        # a 4-core host: that job was a fixed ~0.35 s of every table read
+        # and of every commit's read-back, while a driver-side listing of
+        # the same dirs takes milliseconds (in local mode the listing
+        # "job" runs on the driver host anyway).  Cluster deploys listing
+        # thousands of remote dirs per read can lower it again.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

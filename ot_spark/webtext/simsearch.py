@@ -253,6 +253,19 @@ def _xxhash_sample(
     return np.asarray([r[0] for r in rows], dtype=np.float64)
 
 
+def _checked_sample(sample_X, sample: int) -> np.ndarray:
+    """``sample_X`` as float64, refused unless it is an (n, d) matrix of
+    at most ``sample`` rows — a matrix collected under different sampling
+    parameters would silently train drifted centroids/codebooks."""
+    X = np.asarray(sample_X, dtype=np.float64)
+    if X.ndim != 2 or len(X) > sample:
+        raise ValueError(
+            f"sample_X must be 2-D with at most {sample} rows, "
+            f"got shape {X.shape}"
+        )
+    return X
+
+
 def train_ivf_centroids(
     df: DataFrame,
     n_centroids: int = 16,
@@ -268,11 +281,10 @@ def train_ivf_centroids(
     seed)`` matrix — MUST be exactly that, byte-for-byte, or results
     drift; the default path collects it here."""
     X = (
-        sample_X
+        _checked_sample(sample_X, sample)
         if sample_X is not None
         else _xxhash_sample(df, sample, vec_col, seed)
     )
-    X = np.asarray(X, dtype=np.float64)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     rng = np.random.RandomState(seed)
     cent = X[rng.choice(len(X), n_centroids, replace=False)]
@@ -543,7 +555,7 @@ def train_pq_codebooks(
     exploit), m=16 at 0.825; real corpora with cluster structure do
     better at the same m.  Returns (m, k', d/m) with k' = min(k, n)."""
     X = (
-        np.asarray(sample_X, dtype=np.float64)
+        _checked_sample(sample_X, sample)
         if sample_X is not None
         else _xxhash_sample(df, sample, vec_col, seed)
     )

@@ -38,15 +38,14 @@ def main() -> None:
     p.add_argument("--keep-original-elevation", action="store_true")
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from ot_spark.area_index import load_or_build
     from ot_spark.pipeline import Pipeline, PipelineConfig
     from ot_spark.raster import RasterIndex
+    from ot_spark.session import get_spark
 
-    # on a cluster, master/executors come from spark-submit; locally this
-    # falls back to local[*]
-    spark = SparkSession.builder.appName("ot_spark_pipeline").getOrCreate()
+    # the tested and benchmarked session settings; on a cluster the master
+    # and executors still come from spark-submit
+    spark = get_spark("ot_spark_pipeline")
 
     admin_index = None
     if args.polygons:

@@ -55,3 +55,25 @@ def test_row_chunked_coarse_assign_bit_equal():
             _broadcast_sq_l2(Xc, cent), axis=1
         )[:, :2]
     assert np.array_equal(whole, chunked)
+
+
+def test_trainers_refuse_a_mismatched_sample():
+    """A precollected ``sample_X`` must be an (n, d) matrix of at most
+    ``sample`` rows; anything else raises instead of training drifted
+    centroids/codebooks.  A valid matrix trains exactly as before."""
+    import pytest
+
+    from ot_spark.webtext.simsearch import train_ivf_centroids, train_pq_codebooks
+
+    X = np.random.RandomState(3).randn(40, 8)
+    for train, kw in (
+        (train_ivf_centroids, {"n_centroids": 4}),
+        (train_pq_codebooks, {"m": 2, "k": 4}),
+    ):
+        with pytest.raises(ValueError, match="at most 39 rows"):
+            train(None, sample=39, iters=2, sample_X=X, **kw)
+        with pytest.raises(ValueError, match="2-D"):
+            train(None, sample=40, iters=2, sample_X=X[0], **kw)
+        a = train(None, sample=40, iters=2, sample_X=X, **kw)
+        b = train(None, sample=40, iters=2, sample_X=X.tolist(), **kw)
+        assert np.array_equal(a, b)
